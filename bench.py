@@ -303,16 +303,18 @@ def resolve_record(
       policy below only compares IDENTICAL workloads). A run whose ``sf``
       differs from the existing default record is a different experiment,
       not a remeasurement — it never overwrites the default file; it is
-      redirected to an sf-suffixed sibling. An explicit
+      redirected to ``BENCH_LOCAL_sf<sf>_c<n>.json``. An explicit
       ``SPARK_GRAFT_BENCH_OUT`` always goes exactly where the caller said.
     - **Core-count guard** (round-14 lesson: the driver's 8-core scaling
       run — 75.0 s, faster in wall clock because the sf0.1 bench is
       latency-bound — overwrote the round's quiet 32-core record, leaving
       the repo reference incomparable to every other record). Same rule as
       sf: a run at a different ``cpus`` than the existing default record
-      is a different experiment and redirects to ``BENCH_LOCAL_c<n>.json``.
+      is a different experiment and redirects to the same
+      ``BENCH_LOCAL_sf<sf>_c<n>.json`` — both in the name, so a run that
+      differs in one never overwrites a sibling that differs in the other.
       Records written before round 15 lack the ``cpus`` field; an unknown
-      previous core count falls back to the old behavior.
+      core count is left out of the name and out of the comparison.
     - **Noisy-run guard** (round-6 lesson): a run that self-flags noisy
       never replaces a FASTER record of the identical workload — for a
       deterministic workload the lower total IS the better measurement,
@@ -334,26 +336,19 @@ def resolve_record(
             prev_sf, prev_cpus = prev0.get("sf"), prev0.get("cpus")
         except (OSError, ValueError):
             prev_sf, prev_cpus = None, None
-        if prev_sf is not None and prev_sf != sf:
-            out_name = f"BENCH_LOCAL_sf{sf}.json"
+        other_sf = prev_sf is not None and prev_sf != sf
+        other_cpus = (
+            prev_cpus is not None and cpus is not None and prev_cpus != cpus
+        )
+        if other_sf or other_cpus:
+            c_suffix = "" if cpus is None else f"_c{cpus}"
+            out_name = f"BENCH_LOCAL_sf{sf}{c_suffix}.json"
             path = os.path.join(repo, out_name)
             notes["record_redirect"] = {
                 "file": out_name,
-                "note": f"existing BENCH_LOCAL.json records sf={prev_sf}; "
-                "a different-sf run never overwrites the default record",
-            }
-        elif (
-            prev_cpus is not None
-            and cpus is not None
-            and prev_cpus != cpus
-        ):
-            out_name = f"BENCH_LOCAL_c{cpus}.json"
-            path = os.path.join(repo, out_name)
-            notes["record_redirect"] = {
-                "file": out_name,
-                "note": f"existing BENCH_LOCAL.json records cpus={prev_cpus}; "
-                "a different-core-count run never overwrites the default "
-                "record",
+                "note": f"existing BENCH_LOCAL.json records sf={prev_sf}, "
+                f"cpus={prev_cpus}; a run at another sf or core count never "
+                "overwrites the default record",
             }
     keep_existing = False
     if noisy:

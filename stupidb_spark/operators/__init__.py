@@ -29,7 +29,6 @@ from stupidb_spark.operators.dedup import (
     minhash_lsh_pairs,
     simhash_pairs,
     simhash_radius_stats,
-    spread_small_scan,
 )
 from stupidb_spark.operators.multimodal import (
     decode_audio,
@@ -124,7 +123,6 @@ __all__ = [
     "minhash_lsh_pairs",
     "simhash_pairs",
     "simhash_radius_stats",
-    "spread_small_scan",
     "decode_audio",
     "decode_image",
     "extract_features",

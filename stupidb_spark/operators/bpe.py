@@ -67,11 +67,8 @@ from pyspark.sql import functions as F
 
 from stupidb_spark.functions.text import words
 from stupidb_spark.operators.lineage import cut_lineage
-from stupidb_spark.operators.dedup import (
-    DOC_BYTES_CAP,
-    _doc_bytes_guard,
-    spread_small_scan,
-)
+from stupidb_spark.operators.dedup import DOC_BYTES_CAP, _doc_bytes_guard
+from stupidb_spark.partitioning import spread_small_scan
 
 #: End-of-word marker appended as a trailing symbol before training, so the
 #: tokenizer distinguishes word-final subwords ("est</w>" in "smallest")

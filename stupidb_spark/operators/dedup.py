@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from stupidb_spark.functions.text import words
+from stupidb_spark.partitioning import spread_small_scan
 
 #: Default per-document byte cap for the per-document window paths.
 #: ``doc_shingles``'s lead window and the downstream ``n_sh``
@@ -453,75 +454,6 @@ def _pair_overlap_counts(
             F.min(F.col("b.n_sh")).alias("n_b"),
         )
     )
-
-
-def spread_small_scan(
-    df: DataFrame,
-    min_partitions: int | None = None,
-    *,
-    bytes_per_task: int | None = None,
-) -> DataFrame:
-    """Re-spread a small scan across the cluster before compute-heavy
-    per-row work.
-
-    A small parquet file arrives as one partition, which would serialize the
-    expensive shingle/signature expressions onto a single core. At 100 TB the
-    scan already yields thousands of partitions and this is a no-op; the
-    repartition only fires when the source files are small.
-
-    Smallness is decided from the source file sizes (driver-side metadata,
-    no job) — the previous ``df.rdd.getNumPartitions()`` probe forced a
-    DataFrame→RDD conversion per call, gratuitous analyzer work in a hot
-    service path. Non-file sources (in-memory test frames) count as small.
-
-    ``bytes_per_task`` makes the spread WIDTH volume-derived instead of
-    core-count-pinned: ``clamp(total_bytes / bytes_per_task, 2, cores)``
-    — the ``size_state_partitions``/``adaptive_spread`` pattern (guide §2:
-    derive partitioning from input size). Right for passes whose per-byte
-    compute is LIGHT (a vectorized matmul over the scan): every 32-wide
-    read stage costs ~0.5-0.8 s of pure task/scheduling overhead on tiny
-    partitions (r15 measurement: a trivial 32-task shuffle-read job is
-    0.6-0.8 s wall while the probe UDF's numpy is ~40 ms), so kilobyte
-    partitions at core-count width are pure fixed cost. Leave None for
-    regex/shingle passes whose per-byte CPU is heavy — bytes are the
-    wrong cost proxy there (the round-14 size-first-AQE rejection), and
-    their 32-wide stages do ~300 ms of REAL work per task at sf0.1.
-    Non-file sources fall back to the full target (size unknown).
-    """
-    spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = []
-    import os as _os
-    import urllib.parse as _up
-
-    total = 0
-    for f in files:
-        if not f.startswith("file:"):
-            return df  # remote storage: the scan is already wide at scale
-        try:
-            total += _os.path.getsize(_up.unquote(_up.urlparse(f).path))
-        except OSError:
-            return df  # listed file not stat-able: assume big, leave as-is
-    split = _parse_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    )
-    if total < target * split:
-        if bytes_per_task is not None and files:
-            target = max(2, min(target, -(-total // bytes_per_task)))
-        return df.repartition(target)
-    return df
-
-
-def _parse_bytes(conf_value: str) -> int:
-    """Parse a Spark byte-size conf ("1048576", "128m", "1g", ...)."""
-    v = conf_value.strip().lower().removesuffix("b")
-    for suffix, mult in (("k", 1024), ("m", 1024**2), ("g", 1024**3)):
-        if v.endswith(suffix):
-            return int(float(v[:-1]) * mult)
-    return int(v)
 
 
 def minhash_signature(shingles: Column, n_hashes: int = 32) -> Column:

@@ -44,10 +44,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from stupidb_spark.operators.similarity import (
-    collect_query_matrix,
-    spread_small_scan,
-)
+from stupidb_spark.operators.similarity import collect_query_matrix
+from stupidb_spark.partitioning import spread_small_scan
 
 
 def _normalize(M: np.ndarray) -> np.ndarray:
@@ -279,7 +277,7 @@ def ivf_index(
         base.select(
             F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("b_vec")
         ),
-        bytes_per_task=256 * 1024,
+        light=True,
     ).withColumn(
         "cell", F.coalesce(_assign_udf(centroids)("b_vec"), F.lit(0))
     )

@@ -43,7 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from stupidb_spark.operators.dedup import corpus_join_strategy, spread_small_scan
+from stupidb_spark.operators.dedup import corpus_join_strategy
 from stupidb_spark.operators.lineage import cut_lineage
 from stupidb_spark.operators.ivf import (
     _normalize,
@@ -56,6 +56,7 @@ from stupidb_spark.operators.similarity import (
     _quant_sims,
     norm_guard,
 )
+from stupidb_spark.partitioning import spread_small_scan
 
 
 def derive_n_cells(
@@ -196,14 +197,14 @@ def knn_join(
     # Volume-derived spread width (guide §2): the probe pass is a trivial
     # vectorized matmul per row, so spreading a kilobyte-scale scan to the
     # full core count just multiplies fixed task overhead (r15: the 32-wide
-    # probe stage cost ~0.86 s wall for ~40 ms of numpy at sf0.1). 256 KiB
-    # per task keeps the stage narrow at fixture scale and widens toward
+    # probe stage cost ~0.86 s wall for ~40 ms of numpy at sf0.1). The light
+    # unit keeps the stage narrow at fixture scale and widens toward
     # the core cap as the corpus grows; at 100 TB the scan is already wide
     # and the spread is a no-op either way.
     probed_all = cut_lineage(
-        spread_small_scan(
-            norm_guard(tagged, "knn_join"), bytes_per_task=256 * 1024
-        ).withColumn("__cells", probe(F.col("vec"))),
+        spread_small_scan(norm_guard(tagged, "knn_join"), light=True).withColumn(
+            "__cells", probe(F.col("vec"))
+        ),
         eager=False,
     )
     bsrc = probed_all if self_join else probed_all.filter(F.col("__is_b"))

@@ -48,9 +48,9 @@ from stupidb_spark.operators.dedup import (
     DOC_BYTES_CAP,
     _doc_bytes_guard,
     corpus_join_strategy,
-    spread_small_scan,
 )
 from stupidb_spark.operators.lineage import cut_lineage
+from stupidb_spark.partitioning import spread_small_scan
 
 
 def doc_bigrams(

@@ -23,9 +23,10 @@ the sniffed magic, never a silent wrong answer.
 Scale notes:
 - Payload columns dominate scan bytes → media ops select ONLY the payload +
   key columns (column pruning matters 100× more with binary columns).
-- ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds batch memory:
-  at ~1 MB payloads the default 10k rows/batch would be 10 GB — size it to
-  payload bytes (`repartition_for_payloads` + the conf).
+- ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds batch memory.
+  Nothing here sizes partitions or batches by payload bytes: scans split
+  by ``maxPartitionBytes`` and batches keep the default 10k rows, which at
+  ~1 MB payloads would be 10 GB — lower the conf for such payloads.
 - Feature extraction emits small fixed-dim vectors → output is orders of
   magnitude smaller than input; the stage is map-only (no shuffle).
 """
@@ -573,20 +574,3 @@ def extract_features(media: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
             yield pd.DataFrame(out, columns=["doc_id", "features"])
 
     return media.mapInPandas(feat, _FEATURES_SCHEMA)
-
-
-def repartition_for_payloads(
-    media: DataFrame,
-    est_rows: int,
-    *,
-    avg_payload_bytes: int = 1 << 20,
-    target_partition_bytes: int = 256 << 20,
-) -> DataFrame:
-    """Size partitions by payload bytes, not row count.
-
-    ``maxPartitionBytes`` governs the scan, but post-shuffle stages need this
-    when payloads are MBs: with 1 MB payloads a default 10k-row Arrow batch
-    is 10 GB. Partitions = est_rows × payload_bytes / target_bytes.
-    """
-    parts = max(1, -(-est_rows * avg_payload_bytes // target_partition_bytes))
-    return media.repartition(parts)

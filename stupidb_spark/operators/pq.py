@@ -46,7 +46,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from stupidb_spark.operators.similarity import collect_query_matrix, spread_small_scan
+from stupidb_spark.operators.similarity import collect_query_matrix
+from stupidb_spark.partitioning import spread_small_scan
 
 
 def pq_train(
@@ -135,7 +136,7 @@ def pq_encode(
 
     return spread_small_scan(
         base.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")),
-        bytes_per_task=256 * 1024,
+        light=True,
     ).mapInPandas(encode, f"neighbor_id {id_type}, code array<int>")
 
 
@@ -325,7 +326,7 @@ def ivfpq_encode(
 
     return spread_small_scan(
         vectors.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")),
-        bytes_per_task=256 * 1024,
+        light=True,
     ).mapInPandas(enc, f"neighbor_id {id_type}, cell int, code array<int>")
 
 

@@ -161,7 +161,7 @@ def levenshtein_pairs(
     ``block_col`` is NULL participates in no pair. Callers who want NULLs
     compared must coalesce the block key to a sentinel first.
     """
-    from stupidb_spark.operators.dedup import spread_small_scan
+    from stupidb_spark.partitioning import spread_small_scan
 
     base = df.select(
         F.col(block_col).alias("block"),

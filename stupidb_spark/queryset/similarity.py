@@ -598,7 +598,7 @@ def emb_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation is hash-stable under any partitioning."""
     import numpy as np
 
-    from stupidb_spark.operators.dedup import spread_small_scan
+    from stupidb_spark.partitioning import spread_small_scan
     from stupidb_spark.operators.ivf import REFINE_SCALE
     from stupidb_spark.operators.semantic import _quant_assign_udf
 

@@ -28,16 +28,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stupidb_spark.functions import exact as X
+from stupidb_spark.partitioning import (
+    STATE_BYTES_PER_PARTITION,
+    STREAM_FLOOR,
+    STREAM_MIN_ROWS,
+    STREAM_ROWS_PER_TASK,
+    dir_bytes,
+    width,
+)
 from stupidb_spark.queryset import q
 from stupidb_spark.queryset.sampling import _SA, _SC, _SM
 from stupidb_spark.queryset.similarity import _sql_emb_norm_cte, _sql_qcos_pair
 from stupidb_spark.queryset.text import _duck_score, _duck_words, _DUCK_WTOKS
 from stupidb_spark.sources import load_table
 from stupidb_spark.streaming.events import (
-    dir_bytes,
     run_complete_to_parquet_epochs,
     run_to_parquet_idempotent,
-    size_state_partitions,
 )
 
 _SCRATCH = os.path.join(
@@ -50,6 +56,19 @@ _SCRATCH = os.path.join(
 # stream runs one micro-batch per file, so the gate genuinely exercises
 # multi-batch append semantics, not a single-batch degenerate run.
 _N_INGEST_FILES = 3
+
+
+def _state_partitions(spark: SparkSession, ingest: str) -> int:
+    """State-store partitions for a stateful gate: sized to the staged
+    volume per micro-batch, capped at the cores. A production job with a
+    long-lived checkpoint sizes this once to its peak volume (state
+    partitioning is locked into the checkpoint); these gates re-checkpoint
+    per run, so deriving it per run is exact."""
+    return width(
+        dir_bytes(ingest) / _N_INGEST_FILES,
+        STATE_BYTES_PER_PARTITION,
+        spark.sparkContext.defaultParallelism,
+    )
 
 
 def _run_staged_stream(
@@ -100,16 +119,12 @@ def _run_staged_stream(
         # before the r13 pin), and even the core count over-shards a
         # sub-MB micro-batch (r14: 32 → sized-8 took the tumbling gate
         # 4.2 → 2.5 s with an identical read-back; see
-        # size_state_partitions for the measurement and the scale story).
+        # STATE_BYTES_PER_PARTITION for the measurement).
         run_complete_to_parquet_epochs(
             build(stream),
             out,
             checkpoint_dir=os.path.join(root, "ck"),
-            state_partitions=size_state_partitions(
-                dir_bytes(ingest),
-                _N_INGEST_FILES,
-                spark.sparkContext.defaultParallelism,
-            ),
+            state_partitions=_state_partitions(spark, ingest),
             max_sink_files=8,
         )
         final = max(
@@ -208,13 +223,8 @@ def _run_staged_stream_ordered(
         # gate) — size state partitioning to the staged volume like the
         # complete-mode gates (the round-13 fan-out proxy measured 18.1×
         # at an inherited 2000; r14 measured 32 → sized-8 taking this
-        # gate 6.7 → 3.5 s with an identical read-back; see
-        # size_state_partitions).
-        state_partitions=size_state_partitions(
-            dir_bytes(ingest),
-            _N_INGEST_FILES,
-            spark.sparkContext.defaultParallelism,
-        ),
+        # gate 6.7 → 3.5 s with an identical read-back).
+        state_partitions=_state_partitions(spark, ingest),
     )
     return spark.read.parquet(out).drop("batch_id")
 
@@ -326,11 +336,7 @@ def stream_knn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     append mode) → idempotent parquet sink → read-back. Same quantized-grid
     arithmetic and (count DESC, label ASC) vote as emb_knn_classify_exact,
     now proven through the streaming source and sink too."""
-    from stupidb_spark.streaming.embeddings import (
-        adaptive_spread,
-        knn_label_stream,
-        stream_embeddings,
-    )
+    from stupidb_spark.streaming.embeddings import knn_label_stream, stream_embeddings
 
     emb = load_table(spark, sf_dir, "embeddings")
     reference = emb.filter(F.col("vec_id") % 5 != 0)
@@ -339,13 +345,14 @@ def stream_knn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     # without it the whole quantized-scoring pass for a micro-batch runs
     # on one core (measured at sf1: 10 s -> 2.1 s per batch) — but an
     # UNCONDITIONAL spread cost 1.47x on sf0.1's 133-row batches (r13).
-    # adaptive_spread sizes it to the staged per-trigger volume: skip at
-    # fixture scale, full fan-out at sf1+ (the count is one parquet
-    # metadata job over the tiny staged slice).
-    spread = adaptive_spread(
-        queries.count() // _N_INGEST_FILES,
-        spark.sparkContext.defaultParallelism,
-    )
+    # So it is sized to the staged per-trigger volume: skip at fixture
+    # scale, full fan-out at sf1+ (the count is one parquet metadata job
+    # over the tiny staged slice).
+    rows = queries.count() // _N_INGEST_FILES
+    spread = None
+    if rows >= STREAM_MIN_ROWS:
+        cap = spark.sparkContext.defaultParallelism
+        spread = width(rows, STREAM_ROWS_PER_TASK, cap, STREAM_FLOOR)
     return _run_staged_stream(
         "stream_knn_label",
         sf_dir,

@@ -786,7 +786,7 @@ def text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join. At 100 TB you would shuffle xxhash64(ng) instead of the raw
     # 5-gram string to cut shuffle bytes ~6x; the oracled form keeps the
     # exact string so both engines compare the identical relation.
-    from stupidb_spark.operators.dedup import spread_small_scan
+    from stupidb_spark.partitioning import spread_small_scan
     from stupidb_spark.operators.lineage import cut_lineage
 
     W = _SPAN_W
@@ -973,7 +973,7 @@ def text_strip_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # guard upstream bounds that), and the surviving tokens are selected
     # array-side with a positional filter, so the doc-keyed join carries
     # one compact int set per doc instead of re-shuffled token rows.
-    from stupidb_spark.operators.dedup import spread_small_scan
+    from stupidb_spark.partitioning import spread_small_scan
     from stupidb_spark.operators.lineage import cut_lineage
 
     W = _SPAN_W

@@ -69,7 +69,7 @@ def get_session(
         # CPU-dense per byte: coalescing their kilobyte shuffles to one
         # task serializes real compute. Bytes are the wrong cost proxy
         # for this engine's Python stages; per-operator partition sizing
-        # (e.g. size_state_partitions for streams) is used instead.
+        # (stupidb_spark/partitioning.py) is used instead.
     )
     return builder.getOrCreate()
 

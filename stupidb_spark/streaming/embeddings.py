@@ -61,45 +61,6 @@ def stream_embeddings(
     return reader.parquet(source_dir)
 
 
-def adaptive_spread(
-    rows_per_batch: int,
-    max_partitions: int,
-    *,
-    min_spread_rows: int = 512,
-    min_rows_per_task: int = 40,
-) -> int | None:
-    """Size a per-micro-batch repartition to the batch's actual volume.
-
-    Returns the partition count to pass as ``spread_partitions``, or
-    ``None`` — skip the repartition entirely and keep the map-only
-    zero-shuffle plan — when the batch is too small for a shuffle to pay
-    for itself.
-
-    Why both knobs (measured on the kNN-label gate, rounds 12-14):
-
-    - below ``min_spread_rows`` the spread is a net LOSS: 133-row
-      micro-batches at sf0.1 ran 1.47× slower WITH an unconditional
-      32-way spread (round 13) than with none (round 12) — the per-batch
-      shuffle plus 32 near-empty tasks cost more than single-core scoring
-      of a tiny batch;
-    - above it, ``min_rows_per_task`` floors the per-task chunk so the
-      spread never degenerates into pure task overhead: 1,333-row batches
-      at sf1 → 32 partitions ≈ 40 rows ≈ 300 ms of scoring per task
-      (the 35.8 → 14.3 s round-13 win, reproduced exactly by these
-      defaults), while a hypothetical 600-row batch spreads 15-way
-      instead of paying 32 task launches for 19-row chunks.
-
-    The decision is PLAN-TIME static from the expected per-trigger volume
-    (a production ingest knows its file sizes; the gates read the staged
-    fixture's count) — Structured Streaming cannot branch per batch
-    inside a declarative transformation, and a foreachBatch count-probe
-    would pay an extra scan of every batch instead.
-    """
-    if rows_per_batch < min_spread_rows:
-        return None
-    return max(2, min(max_partitions, rows_per_batch // min_rows_per_task))
-
-
 def knn_label_stream(
     emb_stream: DataFrame,
     reference: DataFrame,

@@ -360,53 +360,6 @@ def run_to_memory(
     return stream_df.sparkSession.table(name)
 
 
-def size_state_partitions(
-    ingest_bytes: int,
-    n_batches: int,
-    cap: int,
-    *,
-    target_batch_bytes: int = 128 * 1024,
-) -> int:
-    """Scale-adaptive state-partition count for a staged-file stream run.
-
-    One state-store instance exists per shuffle partition per micro-batch,
-    AQE never coalesces stateful stream shuffles, and each instance pays a
-    fixed open/commit/maintenance cost regardless of how little data it
-    holds — so the partition count must follow the DATA VOLUME PER
-    MICRO-BATCH, not the core count (guide §2: derive partitioning from
-    input size, not a constant tuned for one deployment). Measured on the
-    round-14 gates at sf0.1 (~0.7 MB/batch): 32 inherited partitions vs 8
-    sized ones is 6.7 s vs 3.5 s on the append session gate and 4.2 s vs
-    2.5 s on the tumbling gate, with bit-identical read-backs; at sf1
-    (~7 MB/batch) the formula saturates at the core-count cap, matching
-    the round-13 tuning that was fastest there.
-
-    ``cap`` should be the session's ``defaultParallelism``: state
-    partitions beyond the core count only help when per-key state exceeds
-    executor memory, which a bounded-cardinality gate rollup never does. A
-    production job with a long-lived checkpoint sizes this ONCE to its
-    peak expected volume (state partitioning is locked into the
-    checkpoint); these gates re-checkpoint per run, so deriving per run is
-    exact, not a re-partitioning hazard.
-    """
-    per_batch = ingest_bytes / max(n_batches, 1)
-    parts = int(per_batch // target_batch_bytes) + 1
-    return max(1, min(parts, cap))
-
-
-def dir_bytes(path: str) -> int:
-    """Driver-side total size of the parquet files under ``path`` — the
-    staged stream input volume, free to compute (no Spark job)."""
-    import os as _os
-
-    total = 0
-    for root, _dirs, files in _os.walk(path):
-        for f in files:
-            if not f.startswith((".", "_")):
-                total += _os.path.getsize(_os.path.join(root, f))
-    return total
-
-
 def run_to_parquet_idempotent(
     stream_df: DataFrame,
     path: str,

@@ -311,12 +311,20 @@ def test_different_cpus_never_overwrites_default(tmp_path):
     rec["cpus"] = 32
     with open(tmp_path / "BENCH_LOCAL.json", "w") as f:
         json.dump(rec, f)
-    path, keep, notes = resolve_record(
-        0.1, 75.0, TIMINGS, False, repo=str(tmp_path), env={}, cpus=8
-    )
-    assert path == str(tmp_path / "BENCH_LOCAL_c8.json")
-    assert not keep
-    assert notes["record_redirect"]["file"] == "BENCH_LOCAL_c8.json"
+    # (sf, cpus) of the run -> its record. The sf0.01 pair is the hole an
+    # either/or guard left: both would share BENCH_LOCAL_sf0.01.json, so
+    # an 8-core run clobbered the 32-core sf-suffixed record
+    for sf, cpus, want in [
+        (0.1, 8, "BENCH_LOCAL_sf0.1_c8.json"),
+        (0.01, 8, "BENCH_LOCAL_sf0.01_c8.json"),
+        (0.01, 32, "BENCH_LOCAL_sf0.01_c32.json"),
+    ]:
+        path, keep, notes = resolve_record(
+            sf, 75.0, TIMINGS, False, repo=str(tmp_path), env={}, cpus=cpus
+        )
+        assert path == str(tmp_path / want)
+        assert not keep
+        assert notes["record_redirect"]["file"] == want
     assert json.load(open(tmp_path / "BENCH_LOCAL.json"))["value"] == 87.4
 
 

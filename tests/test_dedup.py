@@ -15,9 +15,9 @@ from stupidb_spark.operators.dedup import (
     simhash64,
     simhash_fingerprints,
     simhash_pairs,
-    spread_small_scan,
     word_shingles,
 )
+from stupidb_spark.partitioning import spread_small_scan
 from stupidb_spark.sources import load_table
 from tests.conftest import SF_DIR
 

@@ -690,48 +690,6 @@ def test_session_append_emits_at_exact_watermark_boundary(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_adaptive_spread_sizing():
-    """Plan-time spread sizing: skip below the shuffle-pays-for-itself
-    floor (the measured sf0.1 1.47x regression band), full fan-out at
-    sf1 volume (the measured 35.8 -> 14.3 s win), proportional with a
-    per-task floor in between, never exceeding the core count."""
-    from stupidb_spark.streaming.embeddings import adaptive_spread
-
-    assert adaptive_spread(133, 32) is None          # sf0.1 gate volume
-    assert adaptive_spread(0, 32) is None
-    assert adaptive_spread(511, 32) is None
-    assert adaptive_spread(1333, 32) == 32           # sf1 gate volume
-    assert adaptive_spread(600, 32) == 15            # proportional band
-    assert adaptive_spread(520, 32) == 13
-    assert adaptive_spread(10**9, 32) == 32          # capped at cores
-    assert adaptive_spread(512, 4) == 4
-    # floors are honest parameters, not magic
-    assert adaptive_spread(100, 32, min_spread_rows=50) == 2
-
-
-def test_size_state_partitions_sizing():
-    """State-partition sizing follows micro-batch volume, not core count:
-    one state store per shuffle partition per micro-batch is pure fixed
-    cost on an under-filled partition (measured r14: 32 inherited vs 8
-    sized = 6.7 vs 3.5 s on the append session gate at sf0.1, identical
-    read-back hashes), while large staged volumes saturate at the cap."""
-    from stupidb_spark.streaming.events import size_state_partitions
-
-    # sf0.1 events gates: ~2.2 MB staged over 3 batches -> ~6 partitions
-    assert size_state_partitions(2_217_236, 3, 32) == 6
-    # sf0.001: a single 33 KB staging -> 1 partition (floor)
-    assert size_state_partitions(33_164, 3, 32) == 1
-    assert size_state_partitions(0, 3, 32) == 1
-    # sf1 volume (~22 MB) saturates at the core-count cap
-    assert size_state_partitions(22_000_000, 3, 32) == 32
-    # the cap is the session's parallelism, honest parameter
-    assert size_state_partitions(22_000_000, 3, 8) == 8
-    # n_batches guards divide-by-zero
-    assert size_state_partitions(1_000_000, 0, 32) == 8
-    # target is a parameter, not magic
-    assert size_state_partitions(1_000_000, 1, 32, target_batch_bytes=1 << 20) == 1
-
-
 def test_stateful_gates_isolate_state_partition_pin(spark, monkeypatch):
     """Stateful gate streams run on a conf-ISOLATED twin session (round-14
     verdict "What's wrong" #3): the runner's state-partition pin — and the

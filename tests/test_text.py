@@ -292,6 +292,36 @@ def test_nb_hostile_class_labels(spark):
     assert got[100][0] == "a`b" and got[101][0] == "doc" and got[102][0] == "w"
 
 
+def test_nb_null_class_labels(spark):
+    """A NULL label is not a class: reference rows labelled NULL are
+    dropped from the class table (the inner-join semantics), so training
+    must not trip over them and no document is ever predicted NULL — not
+    even one made of the NULL rows' own words."""
+    from stupidb_spark.operators.nb import nb_classify, nb_train
+
+    ref = spark.createDataFrame(
+        [
+            (1, "apple apple banana", "fruit"),
+            (2, "banana apple", "fruit"),
+            (3, "car road car", "auto"),
+            (4, "road road car", "auto"),
+            (5, "storm wind storm", None),
+            (6, "wind wind rain", None),
+        ],
+        "id long, text string, cls string",
+    )
+    docs = spark.createDataFrame(
+        [(10, "apple banana"), (11, "car road"), (12, "storm wind rain")],
+        "id long, text string",
+    )
+    model = nb_train(ref, id_col="id", text_col="text", cls_col="cls")
+    assert sorted(r.cls for r in model.classes.collect()) == ["auto", "fruit"]
+    out = nb_classify(docs, model, id_col="id", text_col="text").collect()
+    pred = {r.doc: r.pred_cls for r in out}
+    assert pred[10] == "fruit" and pred[11] == "auto"
+    assert None not in pred.values() and len(pred) == 3
+
+
 def test_dsir_weights_shift_toward_target(spark):
     """Semantic pin for the DSIR scores: averaged over the corpus, target
     (lang='en') documents must score strictly higher than non-target ones
