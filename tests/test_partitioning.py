@@ -1,46 +1,11 @@
-"""Partition sizing: the one ``width`` rule at every volume the fixtures and
-the measured sf1 runs produce, and the light scan spread end to end."""
+"""Partition sizing: the light scan spread end to end. The ``width`` rule's
+stream and state-store volume tables are in ``tests/test_streaming.py``."""
 
 from __future__ import annotations
 
-from stupidb_spark.partitioning import (
-    LIGHT_FLOOR,
-    STATE_BYTES_PER_PARTITION,
-    STREAM_FLOOR,
-    STREAM_MIN_ROWS,
-    STREAM_ROWS_PER_TASK,
-    spread_small_scan,
-    width,
-)
+from stupidb_spark.partitioning import LIGHT_FLOOR, spread_small_scan
 from stupidb_spark.sources import load_table
 from tests.conftest import SF_DIR
-
-
-def test_width_table():
-    stream = (STREAM_ROWS_PER_TASK, STREAM_FLOOR)
-    state = (STATE_BYTES_PER_PARTITION, 1)
-    # (class, per-batch volume, cap, width; None = below STREAM_MIN_ROWS, no spread)
-    table = [
-        (stream, 133, 32, None),  # sf0.1 kNN-label gate: the 1.47x-loss band
-        (stream, 0, 32, None),
-        (stream, 511, 32, None),
-        (stream, 1333, 32, 32),  # sf1 gate volume: full fan-out
-        (stream, 600, 32, 15),  # proportional band
-        (stream, 520, 32, 13),
-        (stream, 10**9, 32, 32),  # capped at the cores
-        (stream, 512, 4, 4),
-        (state, 2_217_236 / 3, 32, 6),  # sf0.1 events gates, 3 batches
-        (state, 33_164 / 3, 32, 1),  # sf0.001: the floor
-        (state, 0, 32, 1),
-        (state, 22_000_000 / 3, 32, 32),  # sf1 volume saturates at the cap
-        (state, 22_000_000 / 3, 8, 8),
-        (state, 1_000_000, 32, 8),  # one batch
-    ]
-    for (unit, floor), volume, cap, want in table:
-        if unit == STREAM_ROWS_PER_TASK and volume < STREAM_MIN_ROWS:
-            assert want is None, (volume, cap)
-            continue
-        assert width(volume, unit, cap, floor) == want, (unit, volume, cap)
 
 
 def _spread_width(df) -> int:
