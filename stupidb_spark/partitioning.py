@@ -55,6 +55,20 @@ def width(volume: float, unit: int, cap: int, floor: int = 1) -> int:
     return max(floor, min(cap, math.ceil(volume / unit)))
 
 
+def state_partitions(batch_bytes: float, cap: int) -> int:
+    """State-store partitions for a stateful stream whose micro-batches
+    carry ``batch_bytes`` of input each."""
+    return width(batch_bytes, STATE_BYTES_PER_PARTITION, cap)
+
+
+def stream_spread(rows: float, cap: int) -> int | None:
+    """Tasks to spread a stream micro-batch of ``rows`` rows across before
+    per-row scoring, or ``None`` (no spread) below ``STREAM_MIN_ROWS``."""
+    if rows < STREAM_MIN_ROWS:
+        return None
+    return width(rows, STREAM_ROWS_PER_TASK, cap, STREAM_FLOOR)
+
+
 def spread_small_scan(df: DataFrame, *, light: bool = False) -> DataFrame:
     """Re-spread a small scan across the cluster before compute-heavy
     per-row work.

@@ -28,14 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stupidb_spark.functions import exact as X
-from stupidb_spark.partitioning import (
-    STATE_BYTES_PER_PARTITION,
-    STREAM_FLOOR,
-    STREAM_MIN_ROWS,
-    STREAM_ROWS_PER_TASK,
-    dir_bytes,
-    width,
-)
+from stupidb_spark.partitioning import dir_bytes, state_partitions, stream_spread
 from stupidb_spark.queryset import q
 from stupidb_spark.queryset.sampling import _SA, _SC, _SM
 from stupidb_spark.queryset.similarity import _sql_emb_norm_cte, _sql_qcos_pair
@@ -64,10 +57,8 @@ def _state_partitions(spark: SparkSession, ingest: str) -> int:
     long-lived checkpoint sizes this once to its peak volume (state
     partitioning is locked into the checkpoint); these gates re-checkpoint
     per run, so deriving it per run is exact."""
-    return width(
-        dir_bytes(ingest) / _N_INGEST_FILES,
-        STATE_BYTES_PER_PARTITION,
-        spark.sparkContext.defaultParallelism,
+    return state_partitions(
+        dir_bytes(ingest) / _N_INGEST_FILES, spark.sparkContext.defaultParallelism
     )
 
 
@@ -348,11 +339,9 @@ def stream_knn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     # So it is sized to the staged per-trigger volume: skip at fixture
     # scale, full fan-out at sf1+ (the count is one parquet metadata job
     # over the tiny staged slice).
-    rows = queries.count() // _N_INGEST_FILES
-    spread = None
-    if rows >= STREAM_MIN_ROWS:
-        cap = spark.sparkContext.defaultParallelism
-        spread = width(rows, STREAM_ROWS_PER_TASK, cap, STREAM_FLOOR)
+    spread = stream_spread(
+        queries.count() // _N_INGEST_FILES, spark.sparkContext.defaultParallelism
+    )
     return _run_staged_stream(
         "stream_knn_label",
         sf_dir,

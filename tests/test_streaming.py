@@ -14,13 +14,7 @@ from pathlib import Path
 
 import pytest
 
-from stupidb_spark.partitioning import (
-    STATE_BYTES_PER_PARTITION,
-    STREAM_FLOOR,
-    STREAM_MIN_ROWS,
-    STREAM_ROWS_PER_TASK,
-    width,
-)
+from stupidb_spark.partitioning import state_partitions, stream_spread
 from stupidb_spark.queryset import QUERIES
 from stupidb_spark.streaming import (
     deduped_stream,
@@ -702,7 +696,7 @@ def test_adaptive_spread_sizing():
     (the measured sf0.1 1.47x regression band), full fan-out at sf1 volume
     (the measured 35.8 -> 14.3 s win), proportional with a per-task floor
     in between, never exceeding the core count."""
-    # (rows per batch, cap, width; None = below STREAM_MIN_ROWS, no spread)
+    # (rows per batch, cap, width; None = no spread)
     table = [
         (133, 32, None),  # sf0.1 kNN-label gate volume
         (0, 32, None),
@@ -714,10 +708,7 @@ def test_adaptive_spread_sizing():
         (512, 4, 4),
     ]
     for rows, cap, want in table:
-        got = None
-        if rows >= STREAM_MIN_ROWS:
-            got = width(rows, STREAM_ROWS_PER_TASK, cap, STREAM_FLOOR)
-        assert got == want, (rows, cap)
+        assert stream_spread(rows, cap) == want, (rows, cap)
 
 
 def test_size_state_partitions_sizing():
@@ -736,7 +727,7 @@ def test_size_state_partitions_sizing():
         (1_000_000, 32, 8),  # one batch
     ]
     for volume, cap, want in table:
-        assert width(volume, STATE_BYTES_PER_PARTITION, cap) == want, (volume, cap)
+        assert state_partitions(volume, cap) == want, (volume, cap)
 
 
 def test_stateful_gates_isolate_state_partition_pin(spark, monkeypatch):
