@@ -305,13 +305,13 @@ def ivf_probe(
 
     Returns: query_id, neighbor_id, cosine_sim, rk (≤ k rows per query).
     """
-    from stupidb_spark.operators.similarity import QUANT_SCALE, _qdot, _quant_sims
+    from stupidb_spark.operators.similarity import _quant_sims, qnorms
 
     # ONE collect: the same (ids, matrix) drives cell selection and the
     # scorer — the query side never touches Spark again.
     q_ids, Q = collect_query_matrix(queries, id_col, vec_col)
     cells = _probe_cells(Q, centroids, n_probe)
-    qnorms = np.sqrt(_qdot(Q, Q).astype(np.float64) / QUANT_SCALE)
+    qn = qnorms(Q)
     # (nq, n_centroids) membership mask: does query j probe cell c?
     probe_mask = np.zeros((len(q_ids), len(centroids)), dtype=bool)
     for j, row in enumerate(cells):
@@ -327,7 +327,7 @@ def ivf_probe(
             B = np.stack(pdf["b_vec"].to_numpy()).astype(np.float64)
             ids = pdf["neighbor_id"].to_numpy()
             cell_v = pdf["cell"].to_numpy()
-            sims = _quant_sims(B, Q, qnorms)
+            sims = _quant_sims(B, Q, qn)
             frames = []
             for j, qid in enumerate(q_ids):
                 mask = probe_mask[j, cell_v] & (ids != qid)

@@ -51,10 +51,9 @@ from stupidb_spark.operators.ivf import (
     ivf_train,
 )
 from stupidb_spark.operators.similarity import (
-    QUANT_SCALE,
-    _qdot,
     _quant_sims,
     norm_guard,
+    qnorms,
 )
 from stupidb_spark.partitioning import spread_small_scan
 
@@ -337,8 +336,7 @@ def knn_join(
         b_ids = Bp["id"].to_numpy()
         q_ids = Qp["id"].to_numpy()
         b_carry = Bp["__carry"].to_numpy() if with_carry else None
-        qnorms = np.sqrt(_qdot(Qm, Qm).astype(np.float64) / QUANT_SCALE)
-        sims = _quant_sims(Bm, Qm, qnorms)  # (nB, nQ)
+        sims = _quant_sims(Bm, Qm, qnorms(Qm))  # (nB, nQ)
         out_q, out_n, out_s, out_c = [], [], [], []
         for j in range(len(q_ids)):
             col = sims[:, j]
@@ -425,8 +423,7 @@ def knn_join_reference(
     """
     B = base_vecs.astype(np.float64)
     Q = query_vecs.astype(np.float64)
-    qnorms = np.sqrt(_qdot(Q, Q).astype(np.float64) / QUANT_SCALE)
-    sims = _quant_sims(B, Q, qnorms)  # (nB, nQ)
+    sims = _quant_sims(B, Q, qnorms(Q))  # (nB, nQ)
     out = []
     for j in range(len(query_ids)):
         col = sims[:, j]

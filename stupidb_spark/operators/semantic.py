@@ -42,6 +42,8 @@ from stupidb_spark.operators.similarity import (
     _qdot,
     embedding_near_dup_pairs,
     pair_cosine,
+    qnorms,
+    qsims,
 )
 from stupidb_spark.partitioning import spread_small_scan
 
@@ -54,15 +56,7 @@ def _quant_assign_udf(centroids: np.ndarray):
     ``sql_pair_cosine`` construction per (vector, centroid), making the
     assignment (and everything downstream of it) DuckDB-replayable."""
     C = centroids.astype(np.float64)
-    cn = np.array(
-        [
-            np.sqrt(
-                _qdot(C[j][None, :], C[j][None, :]).astype(np.float64)[0]
-                / QUANT_SCALE
-            )
-            for j in range(len(C))
-        ]
-    )
+    cn = qnorms(C)
 
     def fn(v: pd.Series) -> pd.Series:
         if v.isna().any():
@@ -73,14 +67,7 @@ def _quant_assign_udf(centroids: np.ndarray):
                 "null vectors at ingest (cosine is undefined)"
             )
         M = np.stack(v.to_numpy()).astype(np.float64)
-        nm = np.sqrt(_qdot(M, M).astype(np.float64) / QUANT_SCALE)
-        sims = np.empty((len(M), len(C)))
-        for j in range(len(C)):
-            d = (
-                _qdot(M, np.broadcast_to(C[j], M.shape)).astype(np.float64)
-                / QUANT_SCALE
-            )
-            sims[:, j] = d / (nm * cn[j])
+        sims = qsims(M, C, qnorms(M), cn)
         # np.argmax returns the FIRST max — tie → lowest cell, matching
         # the oracle's ORDER BY sim DESC, cell
         return pd.Series(np.argmax(sims, axis=1).astype(np.int32))
@@ -253,15 +240,11 @@ def semantic_dedup_reference(
 
     Returns ``{id: (component, keep)}``.
     """
-    from stupidb_spark.operators.similarity import QUANT_SCALE
-
-    def qdot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-        return np.floor(A * B * QUANT_SCALE + 0.5).astype(np.int64).sum(axis=1)
 
     def qcos(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-        d = qdot(A, B).astype(np.float64) / QUANT_SCALE
-        na = np.sqrt(qdot(A, A).astype(np.float64) / QUANT_SCALE)
-        nb = np.sqrt(qdot(B, B).astype(np.float64) / QUANT_SCALE)
+        d = _qdot(A, B).astype(np.float64) / QUANT_SCALE
+        na = np.sqrt(_qdot(A, A).astype(np.float64) / QUANT_SCALE)
+        nb = np.sqrt(_qdot(B, B).astype(np.float64) / QUANT_SCALE)
         return d / (na * nb)
 
     X = vecs.astype(np.float64)

@@ -34,17 +34,13 @@ from pyspark.sql.window import Window
 
 from stupidb_spark.partitioning import spread_small_scan
 
-# 2^40 quantization grid for dot products. TWO envelopes apply:
-#   * int64 paths (_qdot, embedding_near_dup_pairs): carry
-#     dim · max|aᵢ·bᵢ| · 2^40 in int64 — for 64-dim unit-norm embeddings
-#     that is ~2e13, 5 orders below overflow; headroom up to |aᵢ·bᵢ| ≈ 1e5.
-#   * _quant_sims: sums the floored per-products in float64, exact only
-#     while every partial sum stays ≤ 2^53, i.e.
-#     dim · max|aᵢ·bᵢ| · 2^40 ≤ 2^53  ⇔  max|aᵢ·bᵢ| ≤ 8192/dim
-#     (≈128 at 64 dims) — much tighter than the int64 headroom. Unit-norm
-#     embeddings (|aᵢ·bᵢ| ≤ 1) are comfortably inside both.
-# Dividing by a power of two is exact in IEEE double, so requantized
-# values are identical on every engine.
+# 2^40 quantization grid for dot products: each elementwise product is
+# snapped to floor(p·2^40 + 0.5) and the integers are summed. The sum is
+# carried in int64 (_qdot; DuckDB's BIGINT): dim · max|aᵢ·bᵢ| · 2^40 — for
+# 64-dim unit-norm embeddings ~2e13, 5 orders below overflow. :func:`qsims`
+# sums in float64 instead only while that is provably the same integer
+# (see its guard). Dividing by a power of two is exact in IEEE double, so
+# requantized values are identical on every engine.
 QUANT_SCALE = float(1 << 40)
 
 
@@ -80,10 +76,76 @@ def cosine(a: Column, b: Column) -> Column:
 
 
 def _qdot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    """Exact int64 sum of per-element products quantized to the 2^-40 grid."""
+    """Exact int64 sum of per-element products quantized to the 2^-40 grid
+    — the row-wise reference construction."""
     return (
         np.floor(A * B * QUANT_SCALE + 0.5).astype(np.int64).sum(axis=1)
     )
+
+
+def qnorms(X: np.ndarray) -> np.ndarray:
+    """Quantized L2 norm of every row of ``X``."""
+    return np.sqrt(_qdot(X, X).astype(np.float64) / QUANT_SCALE)
+
+
+# Elements per (rows, |B|, dim) product tensor: ~16 MB of doubles —
+# deliberately CACHE-sized, not RAM-sized. A 16 MB tensor keeps every
+# elementwise pass L3-resident; 32M-element (256 MB) tensors measured 2.5×
+# SLOWER end-to-end on the sf1 stream-labeling gate (70–88 s vs 28 s)
+# because each full-tensor pass round-trips DRAM.
+_CHUNK_ELEMS = 2_000_000
+
+
+def _qsim_chunks(A, B, na, nb, *, upper=False):
+    """Yield ``(s, off, sims)``: quantized cosines of rows ``A[s:e]`` vs
+    rows ``B[off:]`` (``na``/``nb``: :func:`qnorms`), one cache-sized row
+    chunk at a time. ``upper`` (``A`` is ``B``) sets ``off = s + 1``; the
+    caller keeps local ``(i, j)`` with ``j >= i``, the pair ``(s+i, s+1+j)``.
+
+    Bit-identical to :func:`_qdot` per cell: scaling B by 2^40 is exact, so
+    ``a·(b·2^40)`` is the double ``(a·b)·2^40`` (a subnormal product floors
+    to 0 either way). The floored products are integers ≤ max|A|·max|B·2^40|
+    + 1; while ``dim`` of them stay below 2^53 every partial sum is exact,
+    so the float64 sum IS the int64 sum, minus a tensor conversion.
+    Otherwise the sum is int64 (DuckDB's BIGINT); non-finite inputs stay on
+    float64 and come out NaN/inf rather than as a wrapped integer.
+    """
+    Bs = B * QUANT_SCALE
+    dim = A.shape[1]
+    bound = dim * (
+        np.abs(A).max(initial=0.0) * np.abs(Bs).max(initial=0.0) + 1.0
+    )
+    int_sum = 2.0**53 <= bound < np.inf
+    rows = max(1, _CHUNK_ELEMS // (len(B) * dim + 1))
+    if upper:
+        # each chunk re-scores its own diagonal block, rows²/2 cells; at
+        # most n/8 rows keeps that under an eighth of the triangle
+        rows = min(rows, max(1, len(B) // 8))
+    for s in range(0, len(A), rows):
+        e = min(s + rows, len(A))
+        off = s + 1 if upper else 0
+        buf = A[s:e, None, :] * Bs[None, off:, :]  # (rows, |B| - off, dim)
+        buf += 0.5
+        np.floor(buf, out=buf)
+        if int_sum:
+            d = buf.astype(np.int64).sum(axis=2).astype(np.float64)
+        else:
+            d = buf.sum(axis=2)
+        d /= QUANT_SCALE
+        d /= na[s:e, None] * nb[None, off:]
+        yield s, off, d
+
+
+def qsims(
+    A: np.ndarray, B: np.ndarray, na: np.ndarray, nb: np.ndarray
+) -> np.ndarray:
+    """(|A|, |B|) quantized cosine of every row of ``A`` vs every row of
+    ``B`` — the engine's one all-pairs kernel, bit-identical to
+    :func:`sql_pair_cosine` per cell. ``na``/``nb`` are :func:`qnorms`."""
+    out = np.empty((len(A), len(B)))
+    for s, _, sims in _qsim_chunks(A, B, na, nb):
+        out[s : s + len(sims)] = sims
+    return out
 
 
 def pair_cosine(a: Column, b: Column) -> Column:
@@ -100,9 +162,7 @@ def pair_cosine(a: Column, b: Column) -> Column:
         A = np.stack(av.to_numpy()).astype(np.float64)
         B = np.stack(bv.to_numpy()).astype(np.float64)
         d = _qdot(A, B).astype(np.float64) / QUANT_SCALE
-        na = np.sqrt(_qdot(A, A).astype(np.float64) / QUANT_SCALE)
-        nb = np.sqrt(_qdot(B, B).astype(np.float64) / QUANT_SCALE)
-        return pd.Series(d / (na * nb))
+        return pd.Series(d / (qnorms(A) * qnorms(B)))
 
     return F.pandas_udf(fn, "double")(a, b)
 
@@ -142,29 +202,10 @@ def collect_query_matrix(
     return ids, Q
 
 
-def _quant_sims(B: np.ndarray, Q: np.ndarray, qnorms: np.ndarray) -> np.ndarray:
-    """(batch, nq) quantized cosine of every batch vector vs every query.
-
-    The per-product floor needs the elementwise product tensor, so queries
-    are chunked to bound it at ~2M doubles — deliberately CACHE-sized, not
-    RAM-sized: a 16 MB tensor keeps every elementwise pass L3-resident,
-    and raising the budget to 32M doubles (256 MB tensors) measured 2.5×
-    SLOWER end-to-end on the sf1 stream-labeling gate (70–88 s vs 28 s)
-    because each of the ~5 full-tensor passes round-trips DRAM. The
-    floored per-products are integers with |value| ≤ 2^40 and 64-dim sums
-    ≤ 2^46 — exactly representable in float64 — so summing in float64 is
-    bit-identical to the int64 construction the SQL oracles mirror while
-    skipping two full-tensor dtype conversions (pinned in
-    tests/test_similarity.py)."""
-    bnorms = np.sqrt(_qdot(B, B).astype(np.float64) / QUANT_SCALE)
-    out = np.empty((len(B), len(Q)))
-    chunk = max(1, int(2_000_000 / (len(B) * B.shape[1] + 1)) or 1)
-    for s in range(0, len(Q), chunk):
-        Qc = Q[s : s + chunk]  # (c, dim)
-        prod = B[:, None, :] * Qc[None, :, :]  # (batch, c, dim)
-        d = np.floor(prod * QUANT_SCALE + 0.5).sum(axis=2) / QUANT_SCALE
-        out[:, s : s + chunk] = d / (bnorms[:, None] * qnorms[None, s : s + chunk])
-    return out
+def _quant_sims(B: np.ndarray, Q: np.ndarray, qn: np.ndarray) -> np.ndarray:
+    """(batch, nq) quantized cosine of every batch vector vs every query
+    (``qn`` = :func:`qnorms` of ``Q``)."""
+    return qsims(B, Q, qnorms(B), qn)
 
 
 def brute_force_topk(
@@ -189,7 +230,7 @@ def brute_force_topk(
     (sim desc, neighbor_id) for a deterministic total order.
     """
     q_ids, Q = collect_query_matrix(queries, id_col, vec_col)
-    qnorms = np.sqrt(_qdot(Q, Q).astype(np.float64) / QUANT_SCALE)
+    qn = qnorms(Q)
     id_type = dict(base.dtypes)[id_col]
     out_schema = (
         f"query_id {id_type}, neighbor_id {id_type}, cosine_sim double"
@@ -201,7 +242,7 @@ def brute_force_topk(
                 continue
             B = np.stack(pdf["b_vec"].to_numpy()).astype(np.float64)
             ids = pdf["neighbor_id"].to_numpy()
-            sims = _quant_sims(B, Q, qnorms)
+            sims = _quant_sims(B, Q, qn)
             frames = []
             for j, qid in enumerate(q_ids):
                 col = sims[:, j]
@@ -288,7 +329,7 @@ def lsh_topk(
     ran a dedup + join + window pipeline — measured ~2.5× slower at sf0.1.)
     """
     q_ids, Q = collect_query_matrix(queries, id_col, vec_col)
-    qnorms = np.sqrt(_qdot(Q, Q).astype(np.float64) / QUANT_SCALE)
+    qn = qnorms(Q)
 
     planes_rows = []
     for t in range(n_tables):
@@ -313,7 +354,7 @@ def lsh_topk(
             b_buckets = buckets_of(B)  # (batch, n_tables)
             # candidate iff the pair shares a bucket in >= 1 table
             shared = (b_buckets[:, None, :] == q_buckets[None, :, :]).any(axis=2)
-            sims = _quant_sims(B, Q, qnorms)
+            sims = _quant_sims(B, Q, qn)
             frames = []
             for j, qid in enumerate(q_ids):
                 mask = shared[:, j] & (ids != qid)
@@ -433,6 +474,29 @@ def salted_block_tasks(
     )
 
 
+def near_dup_block(ids_a, VA, ids_b=None, VB=None, *, threshold):
+    """``(id_a, id_b, cosine_sim)`` arrays of the pairs with quantized
+    cosine ≥ ``threshold``: every row of ``VA`` against every row of
+    ``VB``, or — with no ``VB`` — each unordered pair of ``VA``'s rows once
+    (upper triangle). ``id_a ≤ id_b`` in every pair."""
+    within = VB is None
+    if within:
+        ids_b, VB = ids_a, VA
+    na = qnorms(VA)
+    nb = na if within else qnorms(VB)
+    out_a, out_b, out_s = [ids_a[:0]], [ids_b[:0]], [np.empty(0)]
+    for s, off, sims in _qsim_chunks(VA, VB, na, nb, upper=within):
+        hit = sims >= threshold
+        if within:
+            hit = np.triu(hit)  # local (i, j) is the pair (s + i, s + 1 + j)
+        ii, jj = np.nonzero(hit)
+        xa, xb = ids_a[ii + s], ids_b[jj + off]
+        out_a.append(np.minimum(xa, xb))
+        out_b.append(np.maximum(xa, xb))
+        out_s.append(sims[ii, jj])
+    return np.concatenate(out_a), np.concatenate(out_b), np.concatenate(out_s)
+
+
 def embedding_near_dup_pairs(
     df: DataFrame,
     *,
@@ -486,81 +550,24 @@ def embedding_near_dup_pairs(
     # prunes to the block column only and adds no repartition exchange
     tasks = salted_block_tasks(work, max_block=max_block, counts_from=raw)
 
-    def empty() -> pd.DataFrame:
-        return pd.DataFrame({"id_a": [], "id_b": [], "cosine_sim": []}).astype(
-            {"cosine_sim": "float64"}
-        )
-
-    def finish(out_a: list, out_b: list, out_s: list) -> pd.DataFrame:
-        if not out_a:
-            return empty()
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "cosine_sim": np.concatenate(out_s),
-            }
-        )
-
-    def within(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return empty()
-        order = np.argsort(pdf["id"].to_numpy(), kind="stable")
-        ids = pdf["id"].to_numpy()[order]
-        V = np.stack(pdf["vec"].to_numpy()).astype(np.float64)[order]
-        norms = np.sqrt(_qdot(V, V).astype(np.float64) / QUANT_SCALE)
-        out_a, out_b, out_s = [], [], []
-        # chunk rows so the (chunk, n, dim) product tensor stays ~2M doubles
-        chunk = max(1, 2_000_000 // (n * V.shape[1]))
-        for s in range(0, n - 1, chunk):
-            e = min(s + chunk, n - 1)
-            prod = V[s:e, None, :] * V[None, :, :]  # (c, n, dim)
-            d = (
-                np.floor(prod * QUANT_SCALE + 0.5).astype(np.int64).sum(axis=2)
-            ).astype(np.float64) / QUANT_SCALE
-            sims = d / (norms[s:e, None] * norms[None, :])
-            for i in range(s, e):
-                row = sims[i - s, i + 1 :]
-                hit = np.nonzero(row >= threshold)[0] + i + 1
-                if len(hit):
-                    out_a.append(np.full(len(hit), ids[i]))
-                    out_b.append(ids[hit])
-                    out_s.append(row[hit - i - 1])
-        return finish(out_a, out_b, out_s)
-
-    def cross(A: pd.DataFrame, B: pd.DataFrame) -> pd.DataFrame:
-        if not len(A) or not len(B):
-            return empty()
-        ids_a = A["id"].to_numpy()
-        ids_b = B["id"].to_numpy()
-        VA = np.stack(A["vec"].to_numpy()).astype(np.float64)
-        VB = np.stack(B["vec"].to_numpy()).astype(np.float64)
-        na = np.sqrt(_qdot(VA, VA).astype(np.float64) / QUANT_SCALE)
-        nb = np.sqrt(_qdot(VB, VB).astype(np.float64) / QUANT_SCALE)
-        out_a, out_b, out_s = [], [], []
-        chunk = max(1, 2_000_000 // (len(B) * VA.shape[1]))
-        for s in range(0, len(A), chunk):
-            e = min(s + chunk, len(A))
-            prod = VA[s:e, None, :] * VB[None, :, :]  # (c, |B|, dim)
-            d = (
-                np.floor(prod * QUANT_SCALE + 0.5).astype(np.int64).sum(axis=2)
-            ).astype(np.float64) / QUANT_SCALE
-            sims = d / (na[s:e, None] * nb[None, :])
-            ii, jj = np.nonzero(sims >= threshold)
-            if len(ii):
-                xa, xb = ids_a[ii + s], ids_b[jj]
-                out_a.append(np.minimum(xa, xb))
-                out_b.append(np.maximum(xa, xb))
-                out_s.append(sims[ii, jj])
-        return finish(out_a, out_b, out_s)
-
     def per_task(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        # a within task (ka == kb) holds only sub-block ka and scores its
+        # upper triangle; a cross task scores sub-block ka × kb, and either
+        # side may have hashed empty
         ka, kb = int(key[1]), int(key[2])
-        if ka == kb:
-            return within(pdf)
-        sub = pdf["__sub"].to_numpy()
-        return cross(pdf[sub == ka], pdf[sub == kb])
+        sides = [pdf] if ka == kb else [pdf[pdf["__sub"] == k] for k in (ka, kb)]
+        if not all(len(side) for side in sides):
+            return pd.DataFrame({"id_a": [], "id_b": [], "cosine_sim": []}).astype(
+                {"cosine_sim": "float64"}
+            )
+        args = []
+        for side in sides:
+            args += [
+                side["id"].to_numpy(),
+                np.stack(side["vec"].to_numpy()).astype(np.float64),
+            ]
+        id_a, id_b, sim = near_dup_block(*args, threshold=threshold)
+        return pd.DataFrame({"id_a": id_a, "id_b": id_b, "cosine_sim": sim})
 
     return tasks.groupBy("block", "__ka", "__kb").applyInPandas(
         per_task, out_schema

@@ -74,12 +74,15 @@ def spread_small_scan(df: DataFrame, *, light: bool = False) -> DataFrame:
     per-row work.
 
     A small parquet file arrives as one partition, which would serialize
-    the expensive per-row expressions onto a single core. At 100 TB the
-    scan already yields thousands of partitions and this is a no-op; the
-    repartition only fires when the source files total less than
-    ``cores × maxPartitionBytes``. Smallness is decided from source file
-    sizes (driver-side metadata, no job). Non-file sources (in-memory
-    frames) count as small.
+    the expensive per-row expressions onto a single core. The repartition
+    only fires when the source files total less than
+    ``cores × maxPartitionBytes``; above that the scan is ASSUMED wide.
+    That holds for files with many row groups (at 100 TB the scan yields
+    thousands of partitions), not for one big row group: a split reads a
+    row group whole, so sf0.1 lineitem (10.8 MB, one row group) passes as
+    "wide" yet puts all its rows in 1 of its 11 scan tasks. Smallness is
+    decided from source file sizes (driver-side metadata, no job).
+    Non-file sources (in-memory frames) count as small.
 
     The spread is ``defaultParallelism`` wide. ``light=True`` sizes it by
     volume instead (``LIGHT_BYTES_PER_TASK``, capped at the cores) — for

@@ -49,11 +49,15 @@ def get_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Scan split size, tuned to the deployment's file sizes: the fixture
-        # tables are a few MB, so the default 128 MB would hand each scan to
-        # 1-3 tasks and serialize the read+map side. On a real cluster with
-        # 100 TB of ≥128 MB files, set SPARK_GRAFT_MAX_PARTITION_BYTES back
-        # up (default there: 128m) — tiny splits at that scale would create
+        # Scan split size. Splits are byte ranges, but a Parquet row group
+        # is read whole by the one split holding its midpoint, so this only
+        # spreads files with many row groups. Every fixture table is a
+        # single row group: at sf0.1 lineitem scans as 11 tasks of which
+        # one reads all 600,000 rows (orders: 1 of 3, events: 1 of 2).
+        # Operators that need width spread explicitly
+        # (partitioning.spread_small_scan). On a real cluster with 100 TB
+        # of ≥128 MB files, set SPARK_GRAFT_MAX_PARTITION_BYTES back up
+        # (default there: 128m) — tiny splits at that scale would create
         # millions of tasks.
         .config(
             "spark.sql.files.maxPartitionBytes",

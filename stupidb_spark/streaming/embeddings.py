@@ -36,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stupidb_spark.operators.similarity import QUANT_SCALE, _qdot, _quant_sims
+from stupidb_spark.operators.similarity import qnorms, qsims
 from stupidb_spark.sources.catalog import FIXTURE_SCHEMAS
 
 # Bounded-model-state bar for the closure-riding reference: 64k labeled
@@ -116,6 +116,7 @@ def knn_label_stream(
     rows.sort(key=lambda r: r._id)
     r_ids = np.array([r._id for r in rows])
     R = np.stack([np.array(r._v, dtype=np.float64) for r in rows])
+    rnorms = qnorms(R)
     # Sorted-unique label table + per-reference-row codes: the vote below
     # is fully vectorized over the Arrow batch instead of a per-row Python
     # loop (measured 29.2 s -> the scoring-dominated sf1 gate row; the
@@ -127,7 +128,7 @@ def knn_label_stream(
     @F.pandas_udf(f"pred_label {label_type}, n_votes int")
     def classify(v: pd.Series) -> pd.DataFrame:
         M = np.stack(v.to_numpy()).astype(np.float64)
-        mnorms = np.sqrt(_qdot(M, M).astype(np.float64) / QUANT_SCALE)
+        mnorms = qnorms(M)
         # Loud guard, matching the batch-side norm_guard contract: a
         # zero-norm (or non-finite) streamed vector would give NaN
         # similarities, an empty candidate set (NaN >= kth is False), and
@@ -140,7 +141,7 @@ def knn_label_stream(
                 f"(norm={mnorms[bad[0]]!r}); cosine is undefined. Filter "
                 f"zero-norm vectors upstream."
             )
-        sims = _quant_sims(R, M, mnorms)  # (n_ref, batch)
+        sims = qsims(R, M, rnorms, mnorms)  # (n_ref, batch)
         n_batch = M.shape[0]
         # O(n_ref) selection instead of an O(n_ref log n_ref) full sort
         # per query: argpartition pulls SOME top-k by similarity (ties cut

@@ -280,26 +280,39 @@ def test_bench_summary_line_carries_queries_and_fits_tail_capture():
     # capture window even at the full 95-query headline with long names.
     import json as _json
 
-    from bench import HEADLINE
+    from bench import HEADLINE, summary_line
 
     # the REAL headline names at a pessimistic 3-decimal reading each
     queries = {name: 12.345 for name in HEADLINE}
-    line = _json.dumps(
-        {
-            "metric": "headline_queries_total",
-            "value": 86.2,
-            "unit": "sec",
-            "n": len(queries),
-            "sf": 0.1,
+    # a full record payload: the bulky noise block must not ride along
+    payload = {
+        "metric": "headline_queries_total",
+        "value": 86.2,
+        "unit": "sec",
+        "queries": queries,
+        "exchanges": {name: 15 for name in HEADLINE},
+        "sf": 0.1,
+        "cpus": 4,
+        "noise": {
             "noisy": False,
             "steal_pct_max": 0.0,
-            "queries": queries,
+            "loadavg_start": 1.23,
+            "calibration": {"secs": [1.234] * 3, "best": 1.234},
+            "attempts": [{"loadavg": 1.0, "steal_pct": {n: 0.1 for n in HEADLINE}}],
         },
-        separators=(",", ":"),
-    )
+    }
+    line = summary_line(payload)
     assert len(line) < 3000
-    parsed = _json.loads(line)
-    assert parsed["queries"] == queries and parsed["value"] == 86.2
+    assert _json.loads(line) == {
+        "metric": "headline_queries_total",
+        "value": 86.2,
+        "unit": "sec",
+        "n": len(queries),
+        "sf": 0.1,
+        "noisy": False,
+        "steal_pct_max": 0.0,
+        "queries": queries,
+    }
 
 
 def test_different_cpus_never_overwrites_default(tmp_path):

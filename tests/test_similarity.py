@@ -846,3 +846,122 @@ def test_quant_sims_float64_sum_bit_identical_to_int64():
         ).astype(np.float64) / QUANT_SCALE
         want[:, j] = d / (bnorms * qnorms[j])
     assert got.tobytes() == want.tobytes()
+
+
+def test_quant_sims_large_products_sum_in_int64():
+    """Same-sign entries in [16, 32] at dim 64 make floored products up to
+    2^50 and sums up to 2^56: past 2^53 a float64 sum rounds (1,719 of the
+    7,400 cells differed when _quant_sims always summed in float64), while
+    DuckDB's BIGINT sql_qdot stays exact. The kernel's guard must switch
+    to the int64 sum and match the row-wise _qdot construction bit for
+    bit."""
+    import numpy as np
+
+    from stupidb_spark.operators.similarity import (
+        QUANT_SCALE,
+        _qdot,
+        _quant_sims,
+    )
+
+    rng = np.random.default_rng(7)
+    B = rng.uniform(16.0, 32.0, size=(200, 64))
+    Q = rng.uniform(16.0, 32.0, size=(37, 64))
+    qn = np.sqrt(_qdot(Q, Q).astype(np.float64) / QUANT_SCALE)
+    bn = np.sqrt(_qdot(B, B).astype(np.float64) / QUANT_SCALE)
+    got = _quant_sims(B, Q, qn)
+    want = np.empty_like(got)
+    for j in range(len(Q)):
+        Qj = np.broadcast_to(Q[j], B.shape)
+        want[:, j] = (_qdot(B, Qj).astype(np.float64) / QUANT_SCALE) / (bn * qn[j])
+    assert got.tobytes() == want.tobytes()
+
+
+def _rowwise_pairs(ids_a, VA, ids_b, VB, threshold, within):
+    """Brute-force reference for near-dup scoring: every candidate pair
+    scored on its own with the row-wise _qdot construction."""
+    import numpy as np
+
+    from stupidb_spark.operators.similarity import QUANT_SCALE, _qdot
+
+    if within:
+        I, J = np.triu_indices(len(VA), k=1)
+        ids_b, VB = ids_a, VA
+    else:
+        I, J = np.indices((len(VA), len(VB))).reshape(2, -1)
+    A, B = VA[I], VB[J]
+    d = _qdot(A, B).astype(np.float64) / QUANT_SCALE
+    na = np.sqrt(_qdot(A, A).astype(np.float64) / QUANT_SCALE)
+    nb = np.sqrt(_qdot(B, B).astype(np.float64) / QUANT_SCALE)
+    sim = d / (na * nb)
+    hit = sim >= threshold
+    xa, xb = ids_a[I[hit]], ids_b[J[hit]]
+    lo, hi = np.minimum(xa, xb).tolist(), np.maximum(xa, xb).tolist()
+    return sorted(zip(lo, hi, [s.hex() for s in sim[hit].tolist()]))
+
+
+def test_near_dup_block_matches_rowwise_reference():
+    """Differential test of the near-dup block kernel: tiny blocks, a
+    block spanning several row chunks (pins the upper-triangle column
+    offset s + 1), a cross rectangle, and a duplicated vector whose
+    cosine IS the threshold (kept: the cut is >=)."""
+    import numpy as np
+
+    from stupidb_spark.operators.similarity import near_dup_block
+
+    rng = np.random.default_rng(11)
+
+    def canon(res):
+        a, b, s = res
+        return sorted(zip(a.tolist(), b.tolist(), [x.hex() for x in s.tolist()]))
+
+    for n, dim, threshold in [(2, 4, -1.0), (3, 4, -1.0), (3, 4, 0.2), (300, 64, 0.1)]:
+        ids = rng.permutation(10 * n)[:n].astype(np.int64)
+        V = rng.normal(size=(n, dim))
+        got = canon(near_dup_block(ids, V, threshold=threshold))
+        want = _rowwise_pairs(ids, V, None, None, threshold, within=True)
+        assert got == want, (n, dim, threshold)
+    assert len(want) > 300
+
+    # a duplicated vector: its cosine (not necessarily 1.0 after rounding)
+    # becomes the threshold, and the pair must survive the >= cut
+    V = rng.normal(size=(40, 64))
+    V[29] = V[3]
+    ids = np.arange(100, 140, dtype=np.int64)
+    dup = _rowwise_pairs(ids[[3]], V[[3]], ids[[29]], V[[29]], -2.0, within=False)
+    threshold = float.fromhex(dup[0][2])
+    got = canon(near_dup_block(ids, V, threshold=threshold))
+    assert got == _rowwise_pairs(ids, V, None, None, threshold, within=True)
+    assert (103, 129, dup[0][2]) in got
+
+    # cross rectangle: sub-block ka × kb, ids interleaved across the sides
+    VA, VB = rng.normal(size=(70, 16)), rng.normal(size=(45, 16))
+    ia = np.arange(0, 140, 2, dtype=np.int64)
+    ib = np.arange(1, 90, 2, dtype=np.int64)
+    got = canon(near_dup_block(ia, VA, ib, VB, threshold=0.3))
+    assert got == _rowwise_pairs(ia, VA, ib, VB, 0.3, within=False)
+    assert got
+
+
+def test_near_dup_salted_cross_matches_rowwise_reference(spark):
+    """The salted path end to end: one block of 60 vectors at
+    max_block=20 splits into 3 sub-blocks, so 3 of the 6 tasks are cross
+    tasks (ka != kb). Every pair and its exact double must equal the
+    brute-force row-wise reference."""
+    import numpy as np
+
+    from stupidb_spark.operators.similarity import embedding_near_dup_pairs
+
+    rng = np.random.default_rng(5)
+    V = rng.normal(size=(60, 8))
+    ids = np.arange(60, dtype=np.int64)
+    df = spark.createDataFrame(
+        [(int(i), "b", [float(x) for x in v]) for i, v in zip(ids, V)],
+        "vec_id long, blk string, embedding array<double>",
+    )
+    out = embedding_near_dup_pairs(
+        df, block_col="blk", threshold=0.2, max_block=20
+    ).collect()
+    got = sorted((r.id_a, r.id_b, r.cosine_sim.hex()) for r in out)
+    want = _rowwise_pairs(ids, V, None, None, 0.2, within=True)
+    assert len(want) > 100
+    assert got == want
